@@ -35,7 +35,20 @@ Scale posture (what changes at 100 TB / 1000 executors):
   frontier outgrows the broadcast threshold the cached edges are
   hash-partitioned on ``src`` just in time, so every later shuffle-join
   round moves only the (small) frontier side.
-- ``localCheckpoint`` every round truncates lineage — without it the
+- While a level has at most R rows (the broadcast threshold, capped at
+  ``_RESIDENT_ROWS``), and the growth so far does not predict more, it
+  is collected, in one job, into the driver JVM and becomes the next
+  level's ``LocalRelation`` frontier. Unlike the one-round broadcast
+  relation it replaces, such a level stays in the driver heap after its
+  round: during the loop the driver holds up to about 2R of these rows
+  (the current and previous frontiers, and the relations appended to
+  ``visited`` since it was last checkpointed onto the executors, which
+  happens once they pass R), and the rows appended since that last
+  checkpoint stay in the returned plan for as long as the caller keeps
+  it. The level's rows never enter the Python process, and no Python
+  worker starts.
+- Larger levels, and reliable mode, truncate lineage with a checkpoint
+  every round (``localCheckpoint``, or a durable spill) — without it the
   plan doubles per iteration and the DAG scheduler dies long before
   data size matters.
 - Path columns grow O(diameter); for diameter-heavy graphs pass
@@ -46,6 +59,7 @@ from __future__ import annotations
 
 import contextlib
 import logging
+import numbers
 import os
 import threading
 import time
@@ -67,24 +81,47 @@ logger = logging.getLogger(__name__)
 # values, the LAST exitor restores them; everyone in between only
 # drives the per-round shuffle width.
 _LOOP_CONF_LOCK = threading.Lock()
-_LOOP_CONF_STATE: dict[int, tuple[int, tuple[str, str]]] = {}
+_LOOP_CONF_STATE: dict[int, tuple[int, tuple[str, str, str]]] = {}
+
+
+# The largest BFS level kept in the driver JVM, whatever
+# ``broadcast_frontier_rows`` allows. A LocalRelation frontier saves its
+# own round a checkpoint and a count, but the rounds that read it, and
+# the final join over ``visited``, pay per row for it. Measured on 4
+# vCPUs (AB_bfs_driver_resident.json): the round reading a resident
+# level of ~4k rows was no slower than from a checkpoint, one reading
+# ~12k rows or more was slower (by ~0.1 s at 12k-18k rows, ~0.3 s at
+# 128k), so larger levels take the checkpoint path.
+_RESIDENT_ROWS = 8_192
 
 
 @contextlib.contextmanager
 def _loop_conf(spark):
     """Disable AQE and yield the session's shuffle-partition default for
     a driver loop; conf restore is refcounted per session so concurrent
-    loops on shared threads cannot leak a mid-loop snapshot."""
+    loops on shared threads cannot leak a mid-loop snapshot.
+
+    Also lets a ``limit(n)`` collect scan every partition in its first
+    job: Spark's default tries one partition, then launches a second job
+    for the rest, which would double the jobs of bfs's driver-resident
+    levels (their outputs have at most the session default's partitions).
+
+    Like disabling AQE, these are session confs: while any loop runs,
+    every other query on the session sees them too — its ``take`` /
+    ``first`` / ``show`` / ``limit`` collects scan all partitions (up to
+    the shuffle-partition default) in their first job instead of one."""
     key = id(getattr(spark, "_jsparkSession", spark))
     conf = spark.conf
     with _LOOP_CONF_LOCK:
-        depth, saved = _LOOP_CONF_STATE.get(key, (0, ("", "")))
+        depth, saved = _LOOP_CONF_STATE.get(key, (0, ("", "", "")))
         if depth == 0:
             saved = (
                 conf.get("spark.sql.adaptive.enabled"),
                 conf.get("spark.sql.shuffle.partitions"),
+                conf.get("spark.sql.limit.initialNumPartitions"),
             )
             conf.set("spark.sql.adaptive.enabled", "false")
+            conf.set("spark.sql.limit.initialNumPartitions", saved[1])
         _LOOP_CONF_STATE[key] = (depth + 1, saved)
     try:
         yield int(saved[1])
@@ -94,6 +131,7 @@ def _loop_conf(spark):
             if depth == 1:
                 conf.set("spark.sql.adaptive.enabled", saved[0])
                 conf.set("spark.sql.shuffle.partitions", saved[1])
+                conf.set("spark.sql.limit.initialNumPartitions", saved[2])
                 del _LOOP_CONF_STATE[key]
             else:
                 _LOOP_CONF_STATE[key] = (depth - 1, saved)
@@ -113,6 +151,32 @@ def _ckpt_lazy(df: DataFrame) -> DataFrame:
     reliable mode is inherently eager — the durable write is the
     materialization)."""
     return _reliable.truncate(df, eager=False)
+
+
+def local_frame(spark, rows: list[tuple], schema: str) -> DataFrame:
+    """Driver-side rows of numbers as a JVM ``LocalRelation`` (an inline
+    ``VALUES`` table) with the flat DDL ``schema``, e.g. ``"id bigint,
+    cost double"``.
+
+    ``spark.createDataFrame(rows)`` would build a Python RDD instead: its
+    scan starts Python workers, and every job reading the frame (each
+    broadcast of a BFS seed, for one) re-evaluates it through them. A
+    ``LocalTableScan`` is planned and read inside the JVM."""
+    fields = [f.split() for f in schema.split(",")]
+    cols = ", ".join(
+        f"CAST(col{i} AS {typ}) AS `{name}`" for i, (name, typ) in enumerate(fields, 1)
+    )
+    values = ", ".join("(" + ", ".join(map(_sql_number, row)) + ")" for row in rows)
+    return spark.sql(f"SELECT {cols} FROM VALUES {values}")
+
+
+def _sql_number(v) -> str:
+    """A SQL literal for a Python or NumPy number (or None)."""
+    if v is None:
+        return "NULL"
+    if isinstance(v, numbers.Integral):
+        return str(int(v))
+    return repr(float(v))  # shortest round-tripping form
 
 
 def undirected_edges(edges: DataFrame) -> DataFrame:
@@ -228,22 +292,39 @@ def bfs(
     Returns ``(id BIGINT, dist BIGINT, path ARRAY<BIGINT>)`` for every
     vertex that appears in ``edges`` (plus the source), ``dist``/``path``
     NULL when unreachable. One shuffle stage per BFS level, all
-    executor-side; the driver only runs the (cheap) empty-frontier test,
-    exactly the Pregel/GraphX iteration shape.
+    executor-side, and one Spark action per level — the Pregel/GraphX
+    iteration shape.
 
     ``reached_only=True`` skips the vertex-universe build and final
     left join entirely and returns just the reached rows — callers that
     drop NULL-dist rows anyway (histograms, reachability sets) save the
     universe distinct + checkpoint + join.
 
-    Join-strategy note: the frontier comes out of ``localCheckpoint`` as
-    an RDD scan with NO stats, so the planner can't see it is tiny and
-    instead broadcasts the (stats-bearing, persisted) edge table every
-    round. The driver loop knows the exact frontier count from the
-    emptiness check, so it hints ``broadcast(frontier)`` while the
-    frontier is under ``broadcast_frontier_rows`` — the edge side then
-    never moves at all — and falls back to a shuffle join for huge
-    frontiers (dense-graph middle rounds at scale).
+    Join-strategy note: the driver loop knows every level's exact row
+    count, so it hints ``broadcast(frontier)`` while the frontier is
+    under ``broadcast_frontier_rows`` — the edge side then never moves
+    at all — and falls back to a shuffle join for huge frontiers
+    (dense-graph middle rounds at scale). The same threshold, capped at
+    ``_RESIDENT_ROWS`` (call it R), sets where a level lives between
+    rounds:
+
+    - **Driver-resident** (default mode, levels of at most R rows): the
+      level's plan is collected with ``limit(R + 1)`` straight into a JVM
+      ``LocalRelation`` — one job that is both the count and the
+      materialization, and a frontier whose row count and size the
+      planner sees exactly. These rows stay in the driver heap (the
+      broadcast they replace lived for one round only): up to about 2R
+      during the loop, because ``visited`` is checkpointed once the
+      relations appended to it since its last truncation pass R; the
+      rows appended since then stay in the returned plan for as long as
+      the caller keeps it.
+    - **Checkpointed** (every level in reliable mode, which keeps its
+      durable per-round spill, and levels that may not fit): the level
+      is a lazy checkpoint materialized by its ``count()``. A level goes
+      this way when the previous level times the largest level-over-
+      level growth seen so far exceeds R. A level collected anyway that
+      overflows the guard is re-run this way, and so is every later
+      level, so a traversal re-runs at most one level.
     """
     if checkpoint_dir is not None:
         # Delegate with the ambient reliable context active: all
@@ -273,73 +354,10 @@ def bfs(
     raw = edges.select(
         F.col("src").cast("bigint").alias("src"), F.col("dst").cast("bigint").alias("dst")
     )
-    # Pin the (big, static) edge side in memory; every round's frontier
-    # join streams over the same cached layout. Round-19 setup-cost
-    # rework (the r18 verdict's #3: round 1 carried 0.6 s of the 2.4 s
-    # query at sf0.1, all of it edge materialization):
-    #
-    # - The hash(src) repartition is DEFERRED: while every frontier fits
-    #   under ``broadcast_frontier_rows`` the rounds are broadcast joins
-    #   and the edge side never moves — a co-locating exchange up front
-    #   is a full 2|E|-row shuffle bought for nothing. The loop below
-    #   watches the exact frontier counts it already tracks and swaps in
-    #   a repartitioned+persisted copy the FIRST time a frontier exceeds
-    #   the broadcast threshold — the 100 TB shuffle-join posture is
-    #   unchanged (the exchange happens once, just in time, reading the
-    #   already-cached rows), and traversals that never need it never
-    #   pay it.
-    # - For the undirected default the cache holds the |E|-row FILTERED
-    #   RAW edges, not the 2|E|-row symmetric union: ``sym`` is rebuilt
-    #   per consumer as cache ∪ rev(cache), so setup scans the source
-    #   once and materializes half the rows (the src!=dst filter is
-    #   orientation-symmetric, so filtering before the union is exact).
-    #   Round-1-equivalent cost measured at sf0.1: 0.90 s caching the
-    #   union → 0.69 s caching raw.
-    #
-    # Edge dedup is OPT-IN (round 9): duplicate (src, dst) rows are
-    # semantically harmless to every bfs path — the dist-only expansion
-    # ends in distinct, the path expansion in a min-aggregate — so the
-    # default skips the full-edge-set hash aggregate at setup (~30% of
-    # the materialization cost on a near-duplicate-free graph, measured
-    # sf0.1). Pass dedup_edges=True for genuinely multi-edge inputs,
-    # where shrinking the cached table once pays back every round; the
-    # dedup's own exchange output is what gets cached, so it is paid
-    # once, and its cache keeps the 2|E| symmetric form (a per-round
-    # re-dedup of the union would re-shuffle every round).
-    base = raw.filter(F.col("src") != F.col("dst"))
-    if dedup_edges and not directed:
-        rev = base.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        sym = (
-            base.unionByName(rev)
-            .dropDuplicates(["src", "dst"])
-            .persist(StorageLevel.MEMORY_AND_DISK)
-        )
-        edge_cache = sym
-    elif not directed:
-        # Columnar persist, NOT RDD-block truncation: a localCheckpoint
-        # variant wrote the cache ~0.2 s faster at sf0.1 but every
-        # later round read the UnsafeRow blocks without columnar
-        # vectorization — the paired rounds A/B showed rounds 2..6
-        # giving the round-1 saving straight back. The InMemoryRelation
-        # costs the one-time encode and keeps per-round scans on the
-        # vectorized cache path.
-        base = base.persist(StorageLevel.MEMORY_AND_DISK)
-        rev = base.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        sym = base.unionByName(rev)
-        edge_cache = base
-    else:
-        if dedup_edges:
-            base = base.dropDuplicates(["src", "dst"])
-        sym = base.persist(StorageLevel.MEMORY_AND_DISK)
-        edge_cache = sym
-    sym_partitioned = False
+    sym, edge_cache, sym_partitioned = _edge_layout(
+        raw, directed, dedup_edges, edge_partitions
+    )
 
-    # Vertex universe: self-loop-only vertices still exist in the graph
-    # even though the loop edge never helps BFS, so they come from RAW.
-    # Undirected sym contains every non-loop vertex as a src; its
-    # distinct shuffles one bare bigint column (and runs exchange-free
-    # whenever the loop's deferred repartition did happen), versus the
-    # raw-side union shuffling all 2|E| endpoint rows.
     if source_df is not None:
         if sources is not None:
             raise ValueError("pass either source_df or sources, not both")
@@ -353,25 +371,30 @@ def bfs(
             .dropDuplicates()
         )
         n_seeds = source_df_rows  # None → counted after the checkpoint below
+        n_local = 0
     else:
         seeds = sorted(set(sources)) if sources else [source]
-        seeds_df = spark.createDataFrame([(s,) for s in seeds], "id bigint")
-        n_seeds = len(seeds)
+        seeds_df = local_frame(spark, [(s,) for s in seeds], "id bigint")
+        n_seeds = n_local = len(seeds)
     init_cols = ["id", F.lit(0).cast("bigint").alias("dist")]
     if with_paths:
         init_cols.append(F.array(F.col("id")).alias("path"))  # path starts at its seed
-    # Lazy checkpoint: round 1's count() materializes the seed plan
-    # inside round 1's job — for a source_df seed the min()-aggregate
-    # scan runs as part of that job instead of as its own, and later
-    # consumers (prev_ids, loops_and_source) read the cached rows.
-    frontier = seeds_df.select(*init_cols).transform(_ckpt_lazy)
-    if n_seeds is None:
-        # undeclared seed count: materialize the seed checkpoint now
-        # (its rows are cached for round 1, so this job costs only the
-        # seed plan itself) and guard the empty-seed silent-NULL case
-        n_seeds = frontier.count()
-        if n_seeds == 0:
-            raise ValueError("source_df produced no seed rows")
+    frontier = seeds_df.select(*init_cols)
+    if source_df is not None:
+        # Lazy checkpoint: round 1's first job materializes the seed
+        # plan — the min()-aggregate scan of a scalar seed runs inside
+        # it instead of as its own job — and later consumers (prev_ids,
+        # loops_and_source) read the cached rows. A ``sources`` seed is
+        # already a lineage-free LocalRelation and needs none.
+        frontier = frontier.transform(_ckpt_lazy)
+        if n_seeds is None:
+            # undeclared seed count: materialize the seed checkpoint now
+            # (its rows are cached for round 1, so this job costs only
+            # the seed plan itself) and guard the empty-seed silent-NULL
+            # case
+            n_seeds = frontier.count()
+            if n_seeds == 0:
+                raise ValueError("source_df produced no seed rows")
 
     loops_and_source = (
         raw.filter(F.col("src") == F.col("dst"))
@@ -388,6 +411,13 @@ def bfs(
     n_front = n_seeds
     n_prev = 0
     n_visited = n_seeds
+    # Driver-resident levels (see the docstring): only in the default
+    # truncation mode — reliable mode keeps its durable per-round spill —
+    # and only until the first level overflows the guard, so a traversal
+    # re-runs at most one level.
+    resident = _reliable.checkpoint_dir() is None
+    resident_rows = min(broadcast_frontier_rows, _RESIDENT_ROWS)
+    growth = 1.0  # largest level-over-level growth seen so far
 
     # Per-round plans are tiny and identical in shape; AQE's per-stage
     # re-planning adds a fixed latency to every one of them (measured
@@ -429,10 +459,10 @@ def bfs(
                 # full visited set keeps the anti-join side O(frontier),
                 # not O(V) — at scale the per-round broadcast stops
                 # growing with the graph.
-                vis_ids = frontier.select("id")
-                if prev_ids is not None:
-                    vis_ids = vis_ids.union(prev_ids)
+                front_ids = frontier.select("id")
+                vis_ids = front_ids if prev_ids is None else front_ids.union(prev_ids)
                 n_vis_side = n_front + n_prev
+                prev_ids, n_prev = front_ids, n_front
             else:
                 # Directed graphs get no such locality (a back edge may
                 # hit an arbitrarily old vertex): anti-join full visited.
@@ -463,10 +493,6 @@ def bfs(
                     .groupBy("id")
                     .agg(F.min("dist").alias("dist"), F.min("path").alias("path"))
                     .join(vis_ids, "id", "left_anti")
-                    # Lazy checkpoint: the count() below materializes it —
-                    # one job per round where eager checkpoint + count
-                    # cost two.
-                    .transform(_ckpt_lazy)
                 )
             else:
                 # dist-only BFS needs no aggregate at all: every vertex
@@ -478,13 +504,35 @@ def bfs(
                     .select(F.col("dst").alias("id"))
                     .distinct()
                     .join(vis_ids, "id", "left_anti")
-                    .select(
-                        "id", F.lit(round_no).cast("bigint").alias("dist")
-                    )
-                    .transform(_ckpt_lazy)
+                    .select("id", F.lit(round_no).cast("bigint").alias("dist"))
                 )
-            prev_ids, n_prev = frontier.select("id"), n_front
-            n_front = new.count()  # materializes the checkpoint; drives the hints
+            n_last, collected = n_front, False
+            # A level that the largest growth seen so far says may
+            # overflow the collect guard is not collected: a trip would
+            # run it twice.
+            if resident and n_front * growth <= resident_rows:
+                # One action: collect the level, capped one row past the
+                # resident limit, into the driver JVM. Its rows never
+                # cross into Python; they become the next level's
+                # LocalRelation frontier (a broadcast needs them in the
+                # driver anyway).
+                jrows = new._jdf.limit(resident_rows + 1).collectAsList()
+                collected = jrows.size() <= resident_rows
+                if collected:
+                    n_front = jrows.size()
+                    new = DataFrame(
+                        spark._jsparkSession.createDataFrame(jrows, new._jdf.schema()),
+                        spark,
+                    )
+                    n_local += n_front
+                else:
+                    resident = False  # guard tripped: re-run as below
+            if not collected:
+                # Lazy checkpoint: the count() materializes it — one job
+                # per round where eager checkpoint + count cost two.
+                new = new.transform(_ckpt_lazy)
+                n_front = new.count()  # drives the next round's hints
+            growth = max(growth, n_front / max(n_last, 1))  # a declared 0-seed source_df
             if stats is not None:
                 stats["rounds"].append(
                     (round_no, n_front, round(time.perf_counter() - _t_round, 4))
@@ -495,12 +543,14 @@ def bfs(
             n_visited += n_front
             # The visited set is only consumed at the end now (the
             # anti-join reads the recent frontiers), so its union chain
-            # is metadata until the final join. Collapse lineage
-            # occasionally anyway: a multi-thousand-round traversal
-            # would otherwise hand the planner an equally deep Union tree.
+            # is metadata until the final join. Collapse it occasionally
+            # anyway: a multi-thousand-round traversal would otherwise
+            # hand the planner an equally deep Union tree, and the
+            # LocalRelation rows held in the driver stay bounded.
             visited = visited.union(new)
-            if round_no % 16 == 0:
+            if round_no % 16 == 0 or n_local > resident_rows:
                 visited = visited.transform(_ckpt)
+                n_local = 0
             frontier = new
 
     if truncated and warn_on_truncation:
@@ -520,10 +570,10 @@ def bfs(
         return visited.select("id", "dist", *(["path"] if with_paths else []))
     # Build + pin the vertex universe before releasing the edge cache —
     # it reads whichever sym cache the loop ended on (see the deferred-
-    # repartition note above), and an unpersisted sym would silently
-    # recompute from source when the caller materializes the result.
-    # The distinct shuffles one bare bigint column (exchange-free when
-    # the deferred repartition happened).
+    # repartition note in _edge_layout), and an unpersisted sym would
+    # silently recompute from source when the caller materializes the
+    # result. The distinct shuffles one bare bigint column (exchange-free
+    # when the edge cache is hash(src)-partitioned).
     if not directed:
         all_vertices = (
             sym.select(F.col("src").alias("id"))
@@ -544,6 +594,77 @@ def bfs(
         "id", "dist", *(["path"] if with_paths else [])
     )
     return result
+
+
+def _edge_layout(
+    raw: DataFrame, directed: bool, dedup_edges: bool, edge_partitions: int
+) -> tuple[DataFrame, DataFrame, bool]:
+    """bfs's edge side: ``(sym, edge_cache, partitioned)``, where ``sym``
+    is the ``(src, dst)`` frame every round joins, ``edge_cache`` the
+    persisted frame it reads (unpersisted by the caller) and
+    ``partitioned`` whether that cache is already hash(src)-partitioned
+    into ``edge_partitions``.
+
+    Pin the (big, static) edge side in memory; every round's frontier
+    join streams over the same cached layout. Round-19 setup-cost rework
+    (round 1 carried 0.6 s of the 2.4 s query at sf0.1, all of it edge
+    materialization):
+
+    - The hash(src) repartition is DEFERRED: while every frontier fits
+      under ``broadcast_frontier_rows`` the rounds are broadcast joins
+      and the edge side never moves — a co-locating exchange up front is
+      a full 2|E|-row shuffle bought for nothing. bfs watches the exact
+      frontier counts it already tracks and swaps in a
+      repartitioned+persisted copy the FIRST time a frontier exceeds the
+      broadcast threshold — the 100 TB shuffle-join posture is unchanged
+      (the exchange happens once, just in time, reading the
+      already-cached rows), and traversals that never need it never pay
+      it.
+    - For the undirected default the cache holds the |E|-row FILTERED
+      RAW edges, not the 2|E|-row symmetric union: ``sym`` is rebuilt
+      per consumer as cache ∪ rev(cache), so setup scans the source once
+      and materializes half the rows (the src!=dst filter is
+      orientation-symmetric, so filtering before the union is exact).
+      Round-1-equivalent cost measured at sf0.1: 0.90 s caching the
+      union → 0.69 s caching raw.
+
+    Edge dedup is OPT-IN (round 9): duplicate (src, dst) rows are
+    semantically harmless to every bfs path — the dist-only expansion
+    ends in distinct, the path expansion in a min-aggregate — so the
+    default skips the full-edge-set hash aggregate at setup (~30% of the
+    materialization cost on a near-duplicate-free graph, measured
+    sf0.1). ``dedup_edges=True`` is for genuinely multi-edge inputs,
+    where shrinking the cached table once pays back every round. The
+    dedup runs under the co-locating hash(src) exchange (an aggregate
+    keyed on (src, dst) is satisfied by a src partitioning), so that one
+    2|E| exchange both dedups and lays out the cache, and the deferred
+    repartition has nothing left to do. Its cache keeps the symmetric
+    form (a per-round re-dedup of the union would re-shuffle every
+    round)."""
+    base = raw.filter(F.col("src") != F.col("dst"))
+
+    def reverse(df: DataFrame) -> DataFrame:
+        return df.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+
+    if dedup_edges:
+        if not directed:
+            base = base.unionByName(reverse(base))
+        sym = (
+            base.repartition(edge_partitions, "src")
+            .dropDuplicates(["src", "dst"])
+            .persist(StorageLevel.MEMORY_AND_DISK)
+        )
+        return sym, sym, True
+    # Columnar persist, NOT RDD-block truncation: a localCheckpoint
+    # variant wrote the cache ~0.2 s faster at sf0.1 but every later
+    # round read the UnsafeRow blocks without columnar vectorization —
+    # the paired rounds A/B showed rounds 2..6 giving the round-1 saving
+    # straight back. The InMemoryRelation costs the one-time encode and
+    # keeps per-round scans on the vectorized cache path.
+    base = base.persist(StorageLevel.MEMORY_AND_DISK)
+    if directed:
+        return base, base, False
+    return base.unionByName(reverse(base)), base, False
 
 
 def connected_component_of(edges: DataFrame, source: int = 0) -> DataFrame:
@@ -723,7 +844,7 @@ def sssp(
         F.col("w").cast("double").alias("w"),
     ).repartition("src").persist(StorageLevel.MEMORY_AND_DISK)
 
-    dist = spark.createDataFrame([(source, 0.0)], "id bigint, cost double").transform(_ckpt)
+    dist = local_frame(spark, [(source, 0.0)], "id bigint, cost double")
     converged = False
     for _hop in range(max_hops):
         cand = dist.join(e, dist["id"] == e["src"]).select(

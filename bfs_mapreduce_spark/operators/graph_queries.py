@@ -25,7 +25,7 @@ from bfs_mapreduce_spark.plans.reliable import (
     ckpt_lazy as _ckpt_lazy,  # parquet spill inside reliable_checkpoints()
 )
 
-from bfs_mapreduce_spark.operators.graph import bfs
+from bfs_mapreduce_spark.operators.graph import bfs, local_frame
 from bfs_mapreduce_spark.registry import register
 from bfs_mapreduce_spark.sources.readers import load_table, read_edge_list
 
@@ -88,7 +88,7 @@ def q_graph_bfs_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     hist = [(0, 1)] + [
         (round_no, n) for round_no, n, _sec in stats["rounds"] if n > 0
     ]
-    return spark.createDataFrame(hist, "dist bigint, n_vertices bigint")
+    return local_frame(spark, hist, "dist bigint, n_vertices bigint")
 
 
 @register(

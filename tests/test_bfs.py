@@ -440,3 +440,207 @@ def test_bfs_deferred_repartition_swap(spark, with_paths):
         ).collect()
     }
     assert swapped == base
+
+
+# --------------------------------------- driver-resident / checkpoint boundary
+
+# Source 0 with broadcast_frontier_rows=3: level 1 is exactly 3 rows
+# (kept in the driver), level 2 is 4 rows (level 1's growth of 3
+# predicts the overflow, so it and the next levels are checkpointed and
+# run as shuffle-join rounds). The second-to-last group points back at
+# visited vertices (harmless undirected, anti-joined when directed); 11
+# is a self-loop-only vertex, 20-21 an unreachable component.
+BOUNDARY_T = 3
+BOUNDARY = (
+    [(0, 1), (0, 2), (0, 3), (1, 4), (1, 5), (2, 5), (2, 6), (3, 7)]
+    + [(4, 8), (7, 8), (6, 9), (9, 10)]
+    + [(5, 1), (8, 7), (10, 9), (6, 7)]
+    + [(11, 11), (20, 21)]
+)
+BOUNDARY_LEVELS = [3, 4, 2, 1, 0]
+# a broken guard can lose a vertex and ping-pong forever: fail fast
+BOUNDARY_MAX_ROUNDS = 10
+
+
+def multi_source_oracle(edges, seeds):
+    """Undirected bfs_oracle from a virtual root -1 with an arc to every
+    seed: dist to the nearest seed, and the lexicographically smallest
+    path among the nearest seeds' shortest paths."""
+    arcs = edges + [(b, a) for a, b in edges] + [(-1, s) for s in seeds]
+    got = bfs_oracle(arcs, source=-1, directed=True)
+    return {
+        v: (None, None) if d is None else (d - 1, p[1:])
+        for v, (d, p) in got.items()
+        if v != -1
+    }
+
+
+def _levels(oracle):
+    dists = [d for d, _ in oracle.values() if d is not None and d > 0]
+    return [dists.count(k) for k in range(1, max(dists) + 1)] + [0]
+
+
+def _rows(df, with_paths):
+    return {
+        r["id"]: (r["dist"], r["path"] if with_paths else None) for r in df.collect()
+    }
+
+
+@pytest.mark.parametrize("limit", ["broadcast_frontier_rows", "resident_cap"])
+@pytest.mark.parametrize("directed", [False, True], ids=["undirected", "directed"])
+@pytest.mark.parametrize("with_paths", [True, False], ids=["paths", "dist"])
+def test_bfs_exact_across_collect_guard(spark, monkeypatch, with_paths, directed, limit):
+    """A level of exactly the resident limit stays driver-resident, the
+    next one (one row more) and the levels the growth says may overflow
+    are checkpointed: the answer and the per-round frontier sizes,
+    terminating 0 included, match the oracle. The limit is either the
+    caller's broadcast_frontier_rows or the module's resident cap under
+    a default threshold."""
+    from bfs_mapreduce_spark.operators import graph
+
+    want = bfs_oracle(BOUNDARY, directed=directed)
+    assert _levels(want) == BOUNDARY_LEVELS
+    if not with_paths:
+        want = {v: (d, None) for v, (d, _) in want.items()}
+    edges = spark.createDataFrame(BOUNDARY, "src bigint, dst bigint")
+    kwargs = {}
+    if limit == "broadcast_frontier_rows":
+        kwargs["broadcast_frontier_rows"] = BOUNDARY_T
+    else:
+        monkeypatch.setattr(graph, "_RESIDENT_ROWS", BOUNDARY_T)
+    checkpointed = []
+    ckpt_lazy = graph._ckpt_lazy
+    monkeypatch.setattr(
+        graph, "_ckpt_lazy", lambda df: checkpointed.append(1) or ckpt_lazy(df)
+    )
+    stats = {}
+    got = bfs(
+        edges, with_paths=with_paths, directed=directed,
+        max_rounds=BOUNDARY_MAX_ROUNDS, stats=stats, **kwargs,
+    )
+    assert _rows(got, with_paths) == want
+    assert [n for _, n, _ in stats["rounds"]] == BOUNDARY_LEVELS
+    # levels 1 and 5 (the empty one, 1 row x growth 3) collected; 2-4
+    # checkpointed
+    assert len(checkpointed) == 3
+
+
+@pytest.mark.parametrize("with_paths", [True, False], ids=["paths", "dist"])
+def test_bfs_guard_trip_reruns_level(spark, monkeypatch, with_paths):
+    """Three seeds, levels 3, 4, 1: level 1 is exactly the limit with a
+    growth of 1, so level 2 (one row more) is collected, trips the
+    guard and is re-run on the checkpoint path, as is every later
+    level."""
+    from bfs_mapreduce_spark.operators import graph
+
+    seeds = [0, 1, 2]
+    edges_list = [(0, 10), (1, 11), (2, 12), (10, 20), (11, 21), (12, 22), (12, 23), (23, 30)]
+    want = multi_source_oracle(edges_list, seeds)
+    if not with_paths:
+        want = {v: (d, None) for v, (d, _) in want.items()}
+    checkpointed = []
+    ckpt_lazy = graph._ckpt_lazy
+    monkeypatch.setattr(
+        graph, "_ckpt_lazy", lambda df: checkpointed.append(1) or ckpt_lazy(df)
+    )
+    edges = spark.createDataFrame(edges_list, "src bigint, dst bigint")
+    stats = {}
+    got = bfs(
+        edges, sources=seeds, with_paths=with_paths, broadcast_frontier_rows=BOUNDARY_T,
+        max_rounds=BOUNDARY_MAX_ROUNDS, stats=stats,
+    )
+    assert _rows(got, with_paths) == want
+    assert [n for _, n, _ in stats["rounds"]] == [3, 4, 1, 0]
+    assert len(checkpointed) == 3  # level 2 (the re-run), 3 and the empty 4
+
+
+@pytest.mark.parametrize(
+    "seeding", ["sources", "source_df_declared", "source_df_counted", "reached_only"]
+)
+def test_bfs_seed_forms_across_collect_guard(spark, seeding):
+    """The seed forms and reached_only across the same guard trip: 11
+    is a second seed whose only edge is a self-loop, so the frontier
+    sizes are those of the single-source traversal."""
+    edges = spark.createDataFrame(BOUNDARY, "src bigint, dst bigint")
+    kwargs = {"broadcast_frontier_rows": BOUNDARY_T, "max_rounds": BOUNDARY_MAX_ROUNDS}
+    seeds = [0, 11]
+    if seeding == "sources":
+        kwargs["sources"] = seeds
+    elif seeding == "reached_only":
+        kwargs.update(sources=seeds, reached_only=True)
+    else:
+        kwargs["source_df"] = spark.range(0, 12, 11)
+        if seeding == "source_df_declared":
+            kwargs["source_df_rows"] = 2
+    want = multi_source_oracle(BOUNDARY, seeds)
+    if seeding == "reached_only":
+        want = {v: dp for v, dp in want.items() if dp[0] is not None}
+    stats = {}
+    got = _rows(bfs(edges, stats=stats, **kwargs), with_paths=True)
+    assert got == want
+    assert [n for _, n, _ in stats["rounds"]] == BOUNDARY_LEVELS
+
+
+def test_bfs_restores_loop_conf(spark):
+    """The loop's conf overrides, the collect guard's first-job
+    partition count included, end with the loop."""
+    keys = (
+        "spark.sql.adaptive.enabled",
+        "spark.sql.shuffle.partitions",
+        "spark.sql.limit.initialNumPartitions",
+    )
+    before = [spark.conf.get(k) for k in keys]
+    edges = spark.createDataFrame(BOUNDARY, "src bigint, dst bigint")
+    bfs(edges, broadcast_frontier_rows=BOUNDARY_T).collect()
+    assert [spark.conf.get(k) for k in keys] == before
+
+
+def test_driver_built_frames_are_local_relations(spark, sf_smoke_dir):
+    """bfs seeds, the sssp seed and the BFS-histogram frame are JVM
+    LocalRelations: their plans scan a LocalTableScan, never a Python
+    RDD (whose scan would start Python workers)."""
+    from bfs_mapreduce_spark.operators.graph import local_frame, sssp
+    from bfs_mapreduce_spark.operators.graph_queries import q_graph_bfs_histogram
+    from bfs_mapreduce_spark.plans.introspect import executed_plan
+
+    edges = local_frame(spark, [(0, 1), (1, 2), (5, 6)], "src bigint, dst bigint")
+    weighted = local_frame(spark, [(0, 1, 2.5)], "src bigint, dst bigint, w double")
+    frames = {
+        "bfs": bfs(edges, sources=[0, 5], reached_only=True),
+        "sssp": sssp(weighted, source=0, max_hops=0, warn_on_truncation=False),
+        "histogram": q_graph_bfs_histogram(spark, sf_smoke_dir),
+    }
+    for name, df in frames.items():
+        plan = executed_plan(df)
+        assert "LocalTableScan" in plan, (name, plan)
+        assert "ExistingRDD" not in plan and "PythonRDD" not in plan, (name, plan)
+    assert sorted(tuple(r) for r in frames["sssp"].collect()) == [(0, 0.0)]
+    assert _rows(frames["bfs"], with_paths=True) == {
+        0: (0, [0]), 1: (1, [0, 1]), 2: (2, [0, 1, 2]), 5: (0, [5]), 6: (1, [5, 6]),
+    }
+
+
+@pytest.mark.parametrize("directed", [False, True], ids=["undirected", "directed"])
+def test_dedup_edges_pays_one_exchange(spark, directed):
+    """dedup_edges=True dedups under the co-locating hash(src)
+    exchange: the cached edge plan holds that one exchange, the layout
+    counts as partitioned (so the deferred repartition never runs), and
+    forced shuffle-join rounds give the oracle's answer."""
+    from bfs_mapreduce_spark.operators.graph import _edge_layout
+    from bfs_mapreduce_spark.plans.introspect import exchange_count, executed_plan
+
+    edges = spark.createDataFrame(MULTI_EDGE, "src bigint, dst bigint")
+    _, cache, partitioned = _edge_layout(edges, directed, True, 4)
+    try:
+        plan = executed_plan(cache)
+        assert partitioned
+        assert exchange_count(cache) == 1, plan
+        assert "hashpartitioning(src#" in plan and ", 4)" in plan, plan
+    finally:
+        cache.unpersist()
+    want = bfs_oracle(MULTI_EDGE, directed=directed)
+    for rows in (1, 200_000):
+        got = bfs(
+            edges, directed=directed, dedup_edges=True, broadcast_frontier_rows=rows
+        )
+        assert _rows(got, with_paths=True) == want

@@ -112,6 +112,60 @@ def test_bfs_default_mode_fails_under_same_loss(spark, monkeypatch):
         bfs(edges_df).collect()
 
 
+# Sedgewick's tinyG edge list, inline: the same shape as the reference
+# dataset (ecc(0) = 2, three components), so the twins below run
+# without the external file.
+TINY_INLINE = [
+    (0, 5), (4, 3), (0, 1), (9, 12), (6, 4), (5, 4), (0, 2),
+    (11, 12), (9, 10), (0, 6), (7, 8), (9, 11), (5, 3),
+]
+
+
+def _chaos(spark, monkeypatch):
+    """Follow every lineage truncation with total block loss."""
+    orig = reliable.truncate
+
+    def chaos_truncate(df, eager=True, name="state"):
+        out = orig(df, eager=eager, name=name)
+        blow_all_blocks(spark)
+        return out
+
+    monkeypatch.setattr(reliable, "truncate", chaos_truncate)
+
+
+def _inline_edges(spark, tmp_path):
+    path = tmp_path / "tiny_inline.txt"
+    path.write_text("".join(f"{a} {b}\n" for a, b in TINY_INLINE))
+    return read_edge_list(spark, str(path))
+
+
+def test_bfs_reliable_mode_survives_midloop_block_loss_inline(
+    spark, tmp_path, monkeypatch
+):
+    """Inline-graph twin of the reliable-mode block-loss test: every
+    round still spills durably, and the answer is exact."""
+    _chaos(spark, monkeypatch)
+    edges_df = _inline_edges(spark, tmp_path)
+    got = {
+        r["id"]: (r["dist"], r["path"])
+        for r in bfs(
+            edges_df, checkpoint_dir=str(tmp_path / "bfs_ckpt")
+        ).collect()
+    }
+    assert got == bfs_oracle(TINY_INLINE)
+    spills = list((tmp_path / "bfs_ckpt").iterdir())
+    assert len(spills) >= 3  # >= one per BFS round
+
+
+def test_bfs_default_mode_fails_under_same_loss_inline(spark, tmp_path, monkeypatch):
+    """Inline-graph twin of the negative control: the default mode's
+    localCheckpoint truncations do not survive the same block loss."""
+    _chaos(spark, monkeypatch)
+    edges_df = _inline_edges(spark, tmp_path)
+    with pytest.raises(Exception, match="(?i)checkpoint"):
+        bfs(edges_df).collect()
+
+
 def test_ambient_context_covers_peer_loops(spark, tmp_path):
     """The other driver loops (k-core here as the representative —
     same _ckpt discipline as SCC/label-prop/k-center/BPE) pick the
